@@ -540,18 +540,25 @@ def oracle_sql() -> dict[str, str]:
         FROM s
     """
 
+    # floor(x * 10000 + 0.5) / 10000: textops.round4_half_up, the same
+    # IEEE operations (DuckDB's round() breaks half-way ties differently)
     sql["quality_score"] = f"""
-        WITH d AS (SELECT doc_id, {_TOKS} AS toks FROM documents)
-        SELECT doc_id, len(toks) AS n_tokens,
-          round(len(list_filter(toks, x -> list_contains({_STOP_EN}, x)))
-                / len(toks), 4) AS stopword_ratio,
-          round(0.4 * least(1.0, len(toks) / 100.0)
+        WITH d AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
+        s AS (
+          SELECT doc_id, len(toks) AS n_tokens,
+            len(list_filter(toks, x -> list_contains({_STOP_EN}, x)))
+              / len(toks) AS stop_ratio,
+            0.4 * least(1.0, len(toks) / 100.0)
               + 0.3 * (len(list_filter(toks, x -> list_contains({_STOP_EN}, x)))
                        / len(toks))
               + 0.3 * least(1.0,
                   (list_sum(list_transform(toks, x -> length(x))) / len(toks))
-                  / 8.0), 4) AS quality
-        FROM d WHERE len(toks) > 0
+                  / 8.0) AS score
+          FROM d WHERE len(toks) > 0)
+        SELECT doc_id, n_tokens,
+          floor(stop_ratio * 10000.0 + 0.5) / 10000.0 AS stopword_ratio,
+          floor(score * 10000.0 + 0.5) / 10000.0 AS quality
+        FROM s
     """
 
     sql["token_count"] = f"""

@@ -7,11 +7,14 @@ Launch (north_rule deployment shape):
       jobs/extract.py \
       --input  <pages parquet/iceberg path> \
       --results <results path> --checkpoint <ckpt path> --metrics <metrics path> \
-      [--buckets 4096] [--partitions 2048]
+      [--buckets 4096]
 
 On a 1000-executor cluster against 10^12 rows, set --buckets to O(100k)
-(each bucket = one resumable commit unit) and --partitions to ~2-3x total
-cores; everything else scales automatically (AQE + salting).
+(each bucket = one resumable commit unit).  The extraction stage sizes
+itself: the pages are hash-partitioned by url into whole waves of Python
+tasks (defaultParallelism x ceil(input bytes / (defaultParallelism x
+spark.sql.adaptive.advisoryPartitionSizeInBytes))), so the knobs that
+move it are the executor count and the AQE advisory partition size.
 """
 
 from __future__ import annotations
@@ -28,7 +31,6 @@ def main() -> None:
     ap.add_argument("--checkpoint", required=True)
     ap.add_argument("--metrics", default=None)
     ap.add_argument("--buckets", type=int, default=4096)
-    ap.add_argument("--partitions", type=int, default=256)
     ap.add_argument(
         "--input-table", default=None,
         help="read a url-bucketed CATALOG TABLE instead of --input: the "
@@ -53,7 +55,6 @@ def main() -> None:
         checkpoint_path=args.checkpoint,
         metrics_path=args.metrics,
         n_buckets=args.buckets,
-        partitions=args.partitions,
     )
     spark.stop()
 

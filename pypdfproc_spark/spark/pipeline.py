@@ -3,12 +3,10 @@
 DataFrame-level shape (SURVEY.md §2.9, §3 E1):
 
     pages(url, warc_ts, html, text, lang)
-      -> latest-snapshot dedup        (window by url, newest warc_ts)
+      -> latest-snapshot dedup        (window by url, newest warc_ts, over
+                                       url-hash partitions sized to whole
+                                       waves of UDF tasks: latest_in_waves)
       -> route                        (kind = pdf | html, by magic bytes)
-      -> salted url-hash repartition  (explicit skew handling: the salt
-                                       decorrelates giant documents from
-                                       url-hash hotspots; AQE only fixes
-                                       join/agg skew, not UDF compute skew)
       -> extract                      (Arrow-batched pandas UDF running
                                        core.extract.extract_document per
                                        payload INSIDE the batch loop; zero
@@ -104,6 +102,7 @@ def _make_extract_batch(pkg_root: str, columns: list,
 
     def _extract_batch(html):
         import sys as _sys
+        import zipimport as _zipimport
 
         import pandas as _pd
 
@@ -123,6 +122,11 @@ def _make_extract_batch(pkg_root: str, columns: list,
         # (core/extract.py utf8_safe) also used by the expectations twin
         # and the golden-parity test — one definition, no drift
         from pypdfproc_spark.core.extract import utf8_safe as _utf8_safe
+
+        # imports done: drop the zip importers, see run_pipeline's docstring
+        for _k, _f in list(_sys.path_importer_cache.items()):
+            if isinstance(_f, _zipimport.zipimporter):
+                del _sys.path_importer_cache[_k]
 
         rows = []
         for payload in html:
@@ -221,27 +225,37 @@ def salted_repartition(
     ).drop("_salt")
 
 
-def spread_giants(
-    pages: DataFrame, partitions: int = 32, big_doc_bytes: int = 1 << 20,
-) -> DataFrame:
-    """Skew handling WITHOUT re-shuffling the whole payload (kept as an
-    alternative; NOT the default on any path since r03).
+def wave_tasks(size_bytes: int, cores: int, advisory_bytes: int,
+               shuffle_partitions: int) -> int:
+    """Extraction-stage tasks in whole waves of ``cores``: one wave per
+    ``cores`` x ``advisory_bytes`` of input, at least one.  An unusable
+    size estimate (Long.MaxValue, Catalyst's "unknown") falls back to
+    shuffle.partitions rounded up to a whole wave."""
+    if size_bytes < (1 << 63) - 1:
+        waves = -(-size_bytes // (cores * advisory_bytes))
+    else:
+        waves = -(-shuffle_partitions // cores)
+    return cores * max(1, waves)
 
-    The idea: the normal-size majority keeps its upstream partitioning and
-    only oversized payloads move.  The catch, measured in
-    tools/ab_extract.py: the union of two filters recomputes the ENTIRE
-    upstream plan per branch (2 scans, 2 window sorts, no ReusedExchange),
-    so it loses to one salted shuffle on unbucketed inputs and to no
-    redistribution at all on bucketed layouts.  Only worth it when the
-    upstream is a cheap re-scannable source AND a second shuffle is
-    unaffordable."""
-    # coalesce: length(NULL) is NULL, which fails BOTH filters — a null
-    # payload row must stay in the normal branch (and reach the extractor's
-    # typed 'null payload' error), never silently vanish
-    is_giant = F.coalesce(F.length("html"), F.lit(0)) > big_doc_bytes
-    normals = pages.filter(~is_giant)
-    giants = pages.filter(is_giant).repartition(partitions)
-    return normals.unionAll(giants)
+
+def latest_in_waves(pages: DataFrame) -> DataFrame:
+    """latest_snapshot feeding the UDF in whole waves of ``wave_tasks``
+    (sized from Catalyst's estimate of ``pages`` and the session's conf;
+    policy: run_pipeline).  If the window needs an Exchange, the pages are
+    first hash-partitioned by url into that count, which the window reuses
+    (AQE does not re-coalesce an explicit count); a url-bucketed scan
+    needs none and is narrowly coalesced."""
+    spark, conf = pages.sparkSession, pages.sparkSession.conf
+    size = pages._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    n = wave_tasks(int(size), spark.sparkContext.defaultParallelism,
+                   advisory, int(conf.get("spark.sql.shuffle.partitions")))
+    snap = latest_snapshot(pages)
+    plan = snap._jdf.queryExecution().executedPlan().toString()
+    if "Exchange hashpartitioning(url" in plan:
+        return latest_snapshot(pages.repartition(n, "url"))
+    return snap.coalesce(n)
 
 
 def extract(pages: DataFrame, extended_filters: bool = False) -> DataFrame:
@@ -327,26 +341,20 @@ def run_pipeline(
 ) -> tuple[DataFrame, DataFrame]:
     """Full pipeline; returns (results_df, metrics_df).
 
-    Skew policy (measured at two scales, tools/ab_extract.py +
-    tools/ab_scaling.py, r03): when the dedup window runs, extraction
-    consumes the window's own hash(url) distribution DIRECTLY — no
-    redistribution.  At 500k docs (repl=100) that is both the fastest
-    wall at every parallelism (local[8] 39.3 s / local[32] 12.4 s vs
-    salted 77.1/29.9 and spread_giants 45.5/14.0) and near-ideal 8->32
-    scaling (0.795 raw, above the measured hardware ceiling): a second
-    full payload shuffle (salted) is a disk-bound, thread-insensitive
-    stage that halves throughput and caps efficiency at 0.64, and the
-    union-of-filters spread recomputes scan+sort+window per branch.
-    Giant-doc balance comes from the window shuffle itself (url-hash
-    over shuffle.partitions) plus AQE coalescing; at repl=10 the
-    variants are within noise of each other (4.0-4.6 s).
+    Task policy: the extraction UDF runs in whole waves of Python tasks
+    (latest_in_waves), because each Python task pays a fixed cost before
+    the UDF sees a row: pyspark's worker calls importlib.invalidate_caches()
+    per task, and CPython 3.11's zipimporter then re-reads the directory of
+    pyspark.zip, py4j or a Spark jar for each cached importer (0.14-0.21 s
+    in a worker; 32 trivial Python tasks took 2.58 s against 0.34 s
+    without Python on local[4], 0.84 s once the extraction batch's drop of
+    those importers applies).  Left to AQE, the window's exchange coalesces
+    by bytes into 4 or 5 tasks on 4 cores, and 5 is a second, idle wave.
 
-    Without dedup there is no upstream shuffle, so the explicit
-    salted_repartition remains: one payload shuffle that spreads giants
-    and evens task sizes before the UDF (the north-star's explicit
-    salting)."""
+    Without dedup, salted_repartition into ``partitions`` is the one
+    payload shuffle: it spreads giants and evens task sizes."""
     if dedup:
-        df = with_bucket(route(latest_snapshot(pages)), n_buckets)
+        df = with_bucket(route(latest_in_waves(pages)), n_buckets)
     else:
         df = with_bucket(route(pages), n_buckets)
         df = salted_repartition(df, partitions)
@@ -414,18 +422,13 @@ def run_pipeline_bucketed(
 ) -> tuple[DataFrame, DataFrame]:
     """run_pipeline over a url-bucketed pages table: identical semantics,
     with ZERO payload exchange end-to-end — the bucketed scan satisfies
-    the dedup window's clustering, and no redistribution follows (plan:
-    Scan -> Sort -> Window -> UDF -> explode, no Exchange anywhere).
+    the dedup window's clustering, and latest_in_waves narrowly coalesces
+    the windowed buckets into whole waves of UDF tasks (plan: Scan -> Sort
+    -> Window -> Coalesce -> UDF -> explode); giants are spread by the
+    url-hash bucket layout.
 
-    Giant-document skew on this path is handled by the LAYOUT, not a
-    shuffle: url-hash bucketing spreads giants across the n_buckets scan
-    partitions, and at corpus scale the bucket count is sized so one
-    bucket's payload fits a task (Iceberg bucket(N, url) with larger N).
-    Measured (tools/ab_extract.py r03, repl=10 medians): direct 3.31 s <
-    spread_giants 4.36 s (union recomputes the scan+sort+window per
-    branch) < salted 5.13 s (a full shuffle forfeits the zero-Exchange
-    win)."""
-    df = with_bucket(route(latest_snapshot(spark.table(table))), n_buckets)
+    ``partitions`` is unused; the frozen bench.py still passes it."""
+    df = with_bucket(route(latest_in_waves(spark.table(table))), n_buckets)
     ex = extract(df)
     return results(ex), metrics(ex)
 
@@ -459,7 +462,6 @@ def run_resumable(
     checkpoint_path: str,
     metrics_path: str | None = None,
     n_buckets: int = 64,
-    partitions: int = 32,
 ) -> None:
     """Resumable run: skip committed buckets, write results/metrics with
     DYNAMIC partition overwrite keyed by bucket, then commit the buckets.
@@ -470,13 +472,11 @@ def run_resumable(
     REPLACE the orphaned ones instead of appending duplicate rows (the
     exact failure window resume exists to cover).  On Iceberg the same
     contract is the atomic REPLACE of bucket(N, url) partitions."""
-    df = route(latest_snapshot(pages))
-    df = with_bucket(df, n_buckets)
+    # the broadcast resume anti-join keeps latest_in_waves' partitioning
+    df = with_bucket(route(latest_in_waves(pages)), n_buckets)
     todo = resume_filter(df, spark, checkpoint_path)
     if todo.isEmpty():
         return
-    # dedup window upstream -> keep its distribution (r03 skew policy;
-    # the resume anti-join is a broadcast and preserves partitioning)
     ex = extract(todo)
     # materialize extraction once for both sinks
     ex = ex.persist()

@@ -576,6 +576,14 @@ def lang_id(spark, sf_dir) -> DataFrame:
     return scored.select("doc_id", pred.alias("pred_lang"))
 
 
+def round4_half_up(c):
+    """Round a double to 4 decimals as floor(x * 10000 + 0.5) / 10000:
+    IEEE operations that the DuckDB oracle repeats bit for bit.  F.round
+    rounds the double's decimal string instead, and DuckDB's round() the
+    scaled double, so the two break half-way ties differently."""
+    return F.floor(c * F.lit(10000.0) + F.lit(0.5)) / F.lit(10000.0)
+
+
 def quality_score(spark, sf_dir) -> DataFrame:
     """Length / stopword-ratio / word-shape quality heuristic in [0,1]."""
     docs = with_tokens(load_documents(spark, sf_dir))
@@ -592,8 +600,8 @@ def quality_score(spark, sf_dir) -> DataFrame:
     return docs.filter(n_tok > 0).select(
         "doc_id",
         n_tok.alias("n_tokens"),
-        F.round(stop_ratio, 4).alias("stopword_ratio"),
-        F.round(score, 4).alias("quality"),
+        round4_half_up(stop_ratio).alias("stopword_ratio"),
+        round4_half_up(score).alias("quality"),
     )
 
 

@@ -114,3 +114,52 @@ def test_query_matches_oracle(name, spark, ddb):
         (a, b) for a, b in zip(sr, dr) if a != b
     ]
     assert not mismatches, "first mismatches: %s" % mismatches[:5]
+
+
+def _tie_text(n_tokens: int, n_stop: int, token_chars: int) -> str:
+    """A document of ``n_tokens`` tokens, ``n_stop`` of them the stopword
+    'the', whose tokens total ``token_chars`` characters (fillers are runs
+    of 'q', never a stopword)."""
+    rest, fill = token_chars - 3 * n_stop, n_tokens - n_stop
+    sizes = [rest // fill + (i < rest % fill) for i in range(fill)]
+    return " ".join(["the"] * n_stop + ["q" * k for k in sizes])
+
+
+def test_quality_score_ties_match_oracle(spark, tmp_path):
+    """Rows whose exact score or stopword ratio sits half-way between two
+    4-decimal values: F.round (half-up on the double's decimal string)
+    and DuckDB's round() (on the scaled double) used to disagree on such
+    rows (0.3138 vs 0.3137); both engines now round the same double with
+    the same IEEE operations."""
+    from fractions import Fraction
+
+    import pandas as pd
+
+    shapes = [(10, 2, 41), (30, 1, 147), (60, 2, 270), (160, 1, 640)]
+    ties = 0
+    for n, s, chars in shapes:
+        score = (Fraction(2, 5) * min(1, Fraction(n, 100))
+                 + Fraction(3, 10) * Fraction(s, n)
+                 + Fraction(3, 10) * min(1, Fraction(chars, 8 * n)))
+        ties += (score * 10000).denominator == 2
+        ties += (Fraction(s, n) * 10000).denominator == 2
+    assert ties >= len(shapes)  # the rows do land on ties
+
+    d = tmp_path / "tie_docs"
+    d.mkdir()
+    pd.DataFrame({
+        "doc_id": list(range(len(shapes))),
+        "text": [_tie_text(*shape) for shape in shapes],
+    }).to_parquet(d / "documents.parquet")
+    sdf = QUERIES["quality_score"](spark, str(d))
+    got = [tuple(r) for r in sdf.collect()]
+    con = duckdb.connect()
+    try:
+        con.execute("CREATE VIEW documents AS SELECT * FROM '%s'"
+                    % (d / "documents.parquet"))
+        cur = con.execute(ORACLES["quality_score"])
+        want = _norm_rows([c[0] for c in cur.description], cur.fetchall())
+    finally:
+        con.close()
+    assert len(got) == len(shapes)
+    assert _norm_rows(sdf.columns, got) == want

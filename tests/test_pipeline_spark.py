@@ -148,7 +148,7 @@ def test_resume_checkpoint(spark, pages_df):
         assert set(r.bucket for r in todo.select("bucket").distinct().collect()) == {4, 5, 6, 7}
 
         P.run_resumable(spark, pages_df, results_path, ckpt_path,
-                        n_buckets=8, partitions=4)
+                        n_buckets=8)
 
         # final results equal a clean full run (same rows)
         full_res, _ = P.run_pipeline(pages_df, n_buckets=8, partitions=4)
@@ -164,7 +164,7 @@ def test_resume_checkpoint(spark, pages_df):
         # a second resume is a no-op (nothing left)
         before = got.count()
         P.run_resumable(spark, pages_df, results_path, ckpt_path,
-                        n_buckets=8, partitions=4)
+                        n_buckets=8)
         assert spark.read.parquet(results_path).count() == before
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -193,7 +193,7 @@ def test_resume_idempotent_after_crash_window(spark, pages_df):
 
         # restart
         P.run_resumable(spark, pages_df, results_path, ckpt_path,
-                        n_buckets=8, partitions=4)
+                        n_buckets=8)
 
         got = spark.read.parquet(results_path)
         full_res, _ = P.run_pipeline(pages_df, n_buckets=8, partitions=4)
@@ -235,6 +235,48 @@ def test_bucketed_dedup_has_no_exchange(spark, pages_df):
         spark.sql("DROP TABLE IF EXISTS pages_bucketed_t")
 
 
+def test_bucketed_path_runs_udf_in_one_wave(spark, pages_df):
+    """On a table with more url buckets than cores the bucketed path keeps
+    zero Exchange and narrowly coalesces the windowed buckets, so at most
+    defaultParallelism partitions feed ArrowEvalPython; the resumable
+    path's helper plans the same on that table."""
+    from pypdfproc_spark.spark import pipeline as P
+
+    cores = spark.sparkContext.defaultParallelism
+    spark.sql("DROP TABLE IF EXISTS pages_waves_t")
+    P.write_pages_bucketed(pages_df, "pages_waves_t", n_buckets=2 * cores)
+    try:
+        res, _ = P.run_pipeline_bucketed(spark, "pages_waves_t", n_buckets=8)
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan, plan
+        assert "ArrowEvalPython" in plan and "Coalesce" in plan, plan
+        # no Exchange between ArrowEvalPython and the output: the output
+        # partitions are the UDF's input partitions
+        assert res.rdd.getNumPartitions() <= cores
+        snap = P.latest_in_waves(spark.table("pages_waves_t"))
+        assert "Exchange" not in snap._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS pages_waves_t")
+
+
+def test_pipeline_with_dedup_still_correct(spark):
+    """run_pipeline's whole-wave url partitioning returns the same rows as
+    the manual salted path."""
+    from pypdfproc_spark.spark import pipeline as P
+
+    rows = build_pages_rows(load_documents(SF_DIR, limit=60))
+    df = spark.createDataFrame(rows, P.PAGES_SCHEMA)
+    res_dedup, _ = P.run_pipeline(df, n_buckets=8, partitions=4, dedup=True)
+    a = {(r.url, r.page_no, r.text) for r in res_dedup.collect()}
+    # manual reference: dedup then salted repartition then extract
+    alt = P.salted_repartition(
+        P.with_bucket(P.route(P.latest_snapshot(df)), 8), 4
+    )
+    res_alt = P.results(P.extract(alt))
+    b = {(r.url, r.page_no, r.text) for r in res_alt.collect()}
+    assert a == b
+
+
 def test_skew_salting_spreads_giants(spark):
     """Oversized payloads must not land on a single partition."""
     import datetime
@@ -262,8 +304,7 @@ def test_skew_salting_spreads_giants(spark):
 
 def test_hostile_payloads_never_vanish(spark):
     """Never-raise contract AND never-drop contract: every input row comes
-    back exactly once with a typed error, including NULL payloads (a null
-    length must not fail both spread_giants filters — regression r03)."""
+    back exactly once with a typed error, including NULL payloads."""
     import datetime
 
     from pypdfproc_spark.spark import pipeline as P

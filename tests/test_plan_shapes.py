@@ -158,6 +158,45 @@ def test_extract_plain_path_single_payload_shuffle(spark):
     assert len(re.findall(r"Exchange", plan)) == 1
 
 
+@pytest.mark.parametrize("size,cores,advisory,shuffle,tasks", [
+    (5_000, 4, 64 << 20, 32, 4),              # tiny input: one wave
+    (0, 4, 64 << 20, 32, 4),                  # empty input: still one wave
+    (256 << 20, 4, 64 << 20, 32, 4),          # exactly one wave's bytes
+    ((256 << 20) + 1, 4, 64 << 20, 32, 8),    # one byte more: two waves
+    (1 << 30, 8, 16 << 20, 32, 64),           # 8 waves of 8 cores
+    ((1 << 63) - 1, 4, 64 << 20, 30, 32),     # no estimate: 30 -> 8 waves
+    ((1 << 63) - 1, 4, 64 << 20, 2, 4),       # no estimate, few partitions
+])
+def test_wave_tasks(size, cores, advisory, shuffle, tasks):
+    """The extraction stage is sized in whole waves of ``cores`` tasks."""
+    from pypdfproc_spark.spark import pipeline as P
+
+    assert P.wave_tasks(size, cores, advisory, shuffle) == tasks
+
+
+def test_extract_dedup_path_whole_wave_exchange(spark, tmp_path):
+    """The dedup window's one payload Exchange is the explicit url-hash
+    partitioning into whole waves: hashpartitioning(url, n) with n a
+    multiple of defaultParallelism, which AQE does not re-coalesce."""
+    import datetime
+
+    from pypdfproc_spark.spark import pipeline as P
+
+    cores = spark.sparkContext.defaultParallelism
+    rows = [("u%d" % i, datetime.datetime(2024, 1, 1), b"x", None, "en")
+            for i in range(8)]
+    local = spark.createDataFrame(rows, P.PAGES_SCHEMA)  # no size estimate
+    local.write.parquet(str(tmp_path / "pages"))
+    scanned = spark.read.parquet(str(tmp_path / "pages"))  # file-size estimate
+    # shuffle.partitions 8 on 4 cores: two waves; the parquet: one wave
+    for pages, tasks in ((local, 2 * cores), (scanned, cores)):
+        res, _ = P.run_pipeline(pages, n_buckets=4, partitions=4)
+        plan = _plan(res)
+        found = re.findall(r"Exchange hashpartitioning\(url#\d+, (\d+)\)", plan)
+        assert found == [str(tasks)], plan
+        assert len(re.findall(r"Exchange", plan)) == 1, plan
+
+
 def test_dedup_funnel_survivors_plan(spark):
     """The composed extract->dedup->quality funnel must stay join-free and
     window-free: two hash aggregations (url doc-assembly, md5 min_by

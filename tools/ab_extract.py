@@ -6,14 +6,12 @@ session, interleaved across repeats so host load drift hits all variants
 equally; medians reported.
 
 Variants:
-  spread   — r02 shape: dedup -> spread_giants (union of filters; the
-             suspect: the union recomputes scan+shuffle+sort+window per
-             branch — plan shows 2 scans / 2 windows / no ReusedExchange)
-  salted   — r01 shape: dedup -> salted_repartition (one full payload
-             shuffle keyed by url-hash, giants salted)
-  direct   — no redistribution: extract directly on the dedup window's
-             hash(url) partitioning (zero extra shuffle, zero recompute;
-             giant skew left to shuffle-partition sizing + AQE coalesce)
+  salted   — dedup -> salted_repartition (one more full payload shuffle
+             keyed by url-hash, giants salted)
+  waves    — the pipeline's policy: pages hash-partitioned by url into
+             whole waves of UDF tasks (latest_in_waves) before the dedup
+             window, no redistribution after it; on the bucketed layout a
+             narrow coalesce of the windowed buckets to the same count
 
 Usage: python tools/ab_extract.py [repeats]
 """
@@ -46,12 +44,12 @@ def _run(variant: str, pages_path: str) -> float:
         warm = pages.limit(CPUS * 64).repartition(CPUS * 2)
         P.extract(P.route(warm)).agg({"doc.n_pages": "sum"}).collect()
         t0 = time.time()
-        df = P.with_bucket(P.route(P.latest_snapshot(pages)), 64)
-        if variant == "spread":
-            df = P.spread_giants(df, CPUS)
-        elif variant == "salted":
+        snap = (P.latest_in_waves if variant == "waves"
+                else P.latest_snapshot)(pages)
+        df = P.with_bucket(P.route(snap), 64)
+        if variant == "salted":
             df = P.salted_repartition(df, CPUS)
-        elif variant != "direct":
+        elif variant != "waves":
             raise ValueError(variant)
         obs = Observation("m")
         ex = P.extract(df).observe(obs, F.count(F.lit(1)).alias("docs"))
@@ -71,7 +69,7 @@ def main() -> None:
     repeats = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     pages_path, _ = pages_parquet(os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    variants = ["spread", "salted", "direct"]
+    variants = ["salted", "waves"]
     walls: dict[str, list] = {v: [] for v in variants}
     for i in range(repeats):
         print("round %d/%d" % (i + 1, repeats), flush=True)
@@ -85,8 +83,6 @@ def main() -> None:
         for v in variants
     }
     print(json.dumps(out))
-
-
 
 
 def _run_bucketed(variant: str, pages_path: str) -> float:
@@ -103,12 +99,13 @@ def _run_bucketed(variant: str, pages_path: str) -> float:
         spark.sql("DROP TABLE IF EXISTS ab_pages_bucketed")
         P.write_pages_bucketed(pages, "ab_pages_bucketed", n_buckets=64)
         t0 = time.time()
-        df = P.with_bucket(P.route(P.latest_snapshot(
-            spark.table("ab_pages_bucketed"))), 64)
-        if variant == "spread":
-            df = P.spread_giants(df, CPUS)
-        elif variant == "salted":
+        snap = (P.latest_in_waves if variant == "waves"
+                else P.latest_snapshot)(spark.table("ab_pages_bucketed"))
+        df = P.with_bucket(P.route(snap), 64)
+        if variant == "salted":
             df = P.salted_repartition(df, CPUS)
+        elif variant != "waves":
+            raise ValueError(variant)
         n = P.results(P.extract(df)).count()
         wall = time.time() - t0
         print("  bucketed/%-6s wall=%.2fs rows=%d" % (variant, wall, n),
@@ -125,7 +122,7 @@ def main_bucketed() -> None:
     repeats = int(sys.argv[2]) if len(sys.argv) > 2 else 3
     pages_path, _ = pages_parquet(os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    variants = ["spread", "salted", "direct"]
+    variants = ["salted", "waves"]
     walls = {v: [] for v in variants}
     for i in range(repeats):
         print("round %d/%d" % (i + 1, repeats), flush=True)

@@ -1,8 +1,9 @@
-"""Round-3: which skew policy SCALES 8->32 at repl=100 (500k docs)?
+"""Which extraction partitioning policy SCALES 8->32 at repl=100 (500k docs)?
 
-The salted default won at repl=10 wall-clock, but adds a second full
-payload shuffle — a disk-bound, thread-insensitive stage that caps
-scaling efficiency.  Measure each variant at local[8] and local[32]
+``waves`` is the pipeline's policy (url-hash partitions in whole waves of
+UDF tasks before the dedup window); ``salted`` adds a second full payload
+shuffle — a disk-bound, thread-insensitive stage that caps scaling
+efficiency.  Measure each variant at local[8] and local[32]
 (fresh session per run, interleaved), report eff = (w8/w32)/4.
 """
 import json
@@ -26,11 +27,11 @@ def run(variant, cores, pages_path):
         warm = pages.limit(cores * 64).repartition(cores * 2)
         P.extract(P.route(warm)).agg({"doc.n_pages": "sum"}).collect()
         t0 = time.time()
-        df = P.with_bucket(P.route(P.latest_snapshot(pages)), 64)
+        snap = (P.latest_in_waves if variant == "waves"
+                else P.latest_snapshot)(pages)
+        df = P.with_bucket(P.route(snap), 64)
         if variant == "salted":
             df = P.salted_repartition(df, cores)
-        elif variant == "spread":
-            df = P.spread_giants(df, cores)
         P.results(P.extract(df)).count()
         w = time.time() - t0
         print("  %-6s local[%d] %.2fs" % (variant, cores, w), flush=True)
@@ -45,7 +46,7 @@ def main():
     repl = int(os.environ.get("SPARK_GRAFT_SCALING_REPL", "100"))
     runs = int(sys.argv[1]) if len(sys.argv) > 1 else 2
     pages_path, _ = pages_parquet("/root/testdata/sf0.1", repl=repl)
-    variants = ["direct", "salted", "spread"]
+    variants = ["waves", "salted"]
     walls = {(v, c): [] for v in variants for c in (8, 32)}
     for i in range(runs):
         print("round %d/%d" % (i + 1, runs), flush=True)
