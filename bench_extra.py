@@ -9,6 +9,8 @@ Modes:
                          are labeled (setJobDescription).
   --plans [names...]     capture .explain("formatted") for each query into
                          plans/r06/<query>_<tag>.txt (--tag before|after).
+                         Both default to every query of
+                         __spark_entry__.queries().
   --extract              time the two extraction pipelines (same windows
                          as bench.py but against the cached pages table).
 
@@ -31,18 +33,6 @@ if REPO not in sys.path:
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-ALL_QUERY_NAMES = [
-    "dedup_exact", "dedup_minhash_lsh", "dedup_simhash",
-    "dedup_simhash_pairs", "dedup_embedding_cosine",
-    "dedup_ngram_jaccard", "dedup_verified", "dedup_components",
-    "doc_fingerprint", "lang_id", "quality_score", "token_count",
-    "ann_topk_bruteforce", "ann_lsh_bucketed", "ann_ivf_topk",
-    "blob_metadata", "blob_byte_histogram", "latest_snapshot",
-    "events_sessionize", "metrics_rollup", "topk_skew",
-    "quality_filter_funnel", "pii_scan", "dedup_text_prefix",
-    "length_histogram",
-]
 
 
 def explain_str(df, mode: str = "formatted") -> str:
@@ -156,12 +146,12 @@ def main() -> None:
     ap.add_argument("--repeats", type=int, default=3)
     ap.add_argument("--tag", default="before")
     args = ap.parse_args()
+    import __spark_entry__ as E
+
     if args.plans is not None:
-        names = args.plans or ALL_QUERY_NAMES
-        capture_plans(names, args.tag)
+        capture_plans(args.plans or list(E.queries()), args.tag)
     if args.queries is not None:
-        names = args.queries or ALL_QUERY_NAMES
-        time_queries(names, args.repeats)
+        time_queries(args.queries or list(E.queries()), args.repeats)
     if args.extract:
         time_extract(args.repeats, tag=args.tag)
 

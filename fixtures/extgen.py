@@ -1,4 +1,4 @@
-"""EXTENDED_FILTERS differential corpus (e01+).
+"""Extended filter mode differential corpus (e01+).
 
 PDFs whose content streams use the OPT-IN superset decoders
 (LZW / ASCIIHex / ASCII85 / RunLength, filter chains, abbreviations,

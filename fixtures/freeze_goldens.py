@@ -70,21 +70,14 @@ EXT_GOLDENS_PATH = os.path.join(REPO, "fixtures", "goldens",
 def freeze_extended() -> dict[str, list[str]]:
     """Extended-mode goldens are OUR OWN deterministic output (the
     reference cannot decode any non-Flate filter — pinned f57/f58), frozen
-    so a regression in the EXTENDED_FILTERS opt-in path shows up as an
+    so a regression in the extended=True opt-in path shows up as an
     explicit golden diff (VERDICT r04 item 4)."""
     sys.path.insert(0, REPO)
     from fixtures.extgen import build_all as build_ext
-    from pypdfproc_spark.core import filters
     from pypdfproc_spark.core.extract import extract_document
 
-    out = {}
-    filters.EXTENDED_FILTERS = True
-    try:
-        for name, data in sorted(build_ext().items()):
-            out[name] = extract_document(data).pages
-    finally:
-        filters.EXTENDED_FILTERS = False
-    return out
+    return {name: extract_document(data, extended=True).pages
+            for name, data in sorted(build_ext().items())}
 
 
 def main() -> None:

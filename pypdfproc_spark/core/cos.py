@@ -69,19 +69,22 @@ class HexStr:
 
 class StreamObj:
     """Stream object: dictionary + raw bytes; decoded lazily and cached
-    (reference: pdf.py:441-477 PDFStreamBase)."""
+    (reference: pdf.py:441-477 PDFStreamBase).  ``extended`` is the
+    owning document's filter mode (filters.decode_stream)."""
 
-    __slots__ = ("dict", "raw", "_decoded")
+    __slots__ = ("dict", "raw", "extended", "_decoded")
 
-    def __init__(self, d: dict, raw: bytes):
+    def __init__(self, d: dict, raw: bytes, extended: bool):
         self.dict = d
         self.raw = raw
+        self.extended = extended
         self._decoded = None
 
     @property
     def data(self) -> bytes:
         if self._decoded is None:
-            self._decoded = filters.decode_stream(self.dict, self.raw)
+            self._decoded = filters.decode_stream(self.dict, self.raw,
+                                                  self.extended)
         return self._decoded
 
 
@@ -532,7 +535,8 @@ class Parser:
             t = self.sc.next_token()
             if t != ("kw", "endstream"):
                 raise PdfError("expected endstream, got %r" % (t,))
-            val = StreamObj(val, raw)
+            val = StreamObj(val, raw,
+                            self.doc is not None and self.doc.extended)
             t = self.sc.next_token()
         # Reference parity (diff_fuzz r04): _LoadObject tokenizes FORWARD
         # until a literal endobj token, IGNORING extra well-formed tokens
@@ -759,8 +763,11 @@ class PdfDocument:
     parse-once object cache.
     """
 
-    def __init__(self, data: bytes):
+    def __init__(self, data: bytes, extended: bool = False):
         self.data = data
+        # filter mode of every stream parsed from this document; set
+        # before the xref walk, which already decodes xref streams
+        self.extended = extended
         self.version = self._parse_header()
         self.objmap: dict[tuple[int, int], object] = {}
         self.cache: dict[tuple[int, int], object] = {}

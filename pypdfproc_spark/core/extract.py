@@ -69,10 +69,10 @@ def is_pdf(payload: bytes) -> bool:
     return _PDF_MAGIC.match(payload) is not None
 
 
-def extract_pdf(payload: bytes) -> ExtractResult:
+def extract_pdf(payload: bytes, extended: bool = False) -> ExtractResult:
     res = ExtractResult(parser="pdf")
     try:
-        doc = PdfDocument(payload)
+        doc = PdfDocument(payload, extended)
         pages = doc.pages()
     except Exception as e:  # malformed document: nothing extractable
         res.error = "%s: %s" % (type(e).__name__, e)
@@ -138,8 +138,10 @@ def extract_html(payload: bytes) -> ExtractResult:
     return res
 
 
-def extract_document(payload) -> ExtractResult:
-    """Router + extractor; never raises."""
+def extract_document(payload, extended: bool = False) -> ExtractResult:
+    """Router + extractor; never raises.  ``extended`` opts the PDF path
+    into the superset of decode filters (filters.decode_stream); the
+    default is strict reference parity."""
     try:
         if payload is None:
             return ExtractResult(parser="none", error="null payload")
@@ -148,7 +150,7 @@ def extract_document(payload) -> ExtractResult:
         elif isinstance(payload, bytearray):
             payload = bytes(payload)
         if is_pdf(payload):
-            return extract_pdf(payload)
+            return extract_pdf(payload, extended)
         return extract_html(payload)
     except Exception as e:  # belt & braces: a UDF must never throw
         return ExtractResult(parser="error", error="%s: %s" % (type(e).__name__, e))

@@ -287,24 +287,20 @@ def _rl_decode(data: bytes) -> bytes:
 # when its /Filter is the exact name 'FlateDecode' — an ARRAY (even
 # [/FlateDecode]), the 'Fl' abbreviation, LZW/AHx/A85/RL all raise
 # ValueError and drop the page (pdf.py:456-469; pinned by fixtures
-# f57_lzw_strict_drop / f58_filter_array_flate).  Set EXTENDED_FILTERS =
-# True (process-wide; the Spark pipeline plumbs it via
-# pipeline.extract(extended_filters=True)) to opt into the documented
+# f57_lzw_strict_drop / f58_filter_array_flate).  extended=True (plumbed
+# per document: extract_document(payload, extended=True) ->
+# PdfDocument.extended -> StreamObj.data; the Spark pipeline passes it
+# from pipeline.extract(extended_filters=True)) opts into the documented
 # superset: filter chains, abbreviations, LZW, ASCIIHex/85, RunLength —
 # strictly MORE documents decoded, at the cost of per-url byte parity
 # with the reference on documents the reference cannot read.
-EXTENDED_FILTERS = False
-
-
-def decode_stream(d: dict, raw: bytes, extended: bool | None = None) -> bytes:
+def decode_stream(d: dict, raw: bytes, extended: bool = False) -> bytes:
     """Apply the (possibly chained) /Filter of a stream dictionary.
 
     Unsupported-by-parity filters raise UnsupportedFilterError, which the
     pipeline turns into a decode_failures metric event (and the page
     drops, like the reference's ValueError at pdf.py:469).
     """
-    if extended is None:
-        extended = EXTENDED_FILTERS
     filt = d.get("Filter")
     if filt is None:
         return raw
@@ -317,7 +313,7 @@ def decode_stream(d: dict, raw: bytes, extended: bool | None = None) -> bytes:
             )
         raise UnsupportedFilterError(
             "filter %r unsupported by the reference (strict parity; "
-            "set filters.EXTENDED_FILTERS for the superset)" % (filt,)
+            "pass extended=True for the superset)" % (filt,)
         )
     filts = filt if isinstance(filt, list) else [filt]
     parms = d.get("DecodeParms", d.get("DP"))

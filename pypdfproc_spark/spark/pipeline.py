@@ -26,6 +26,7 @@ partitioned by bucket so the mechanism is identical and testable locally.
 
 from __future__ import annotations
 
+import functools
 import json
 
 import pandas as pd
@@ -92,8 +93,7 @@ _PKG_ROOT = _os.path.dirname(
 )
 
 
-def _make_extract_batch(pkg_root: str, columns: list,
-                        extended_filters: bool = False):
+def _make_extract_batch(pkg_root: str, columns: list, extended: bool):
     """Factory: the returned closure is cloudpickled BY VALUE (module-level
     functions are pickled by reference and would require the package to be
     importable on the worker before any code of ours runs).  The closure
@@ -110,14 +110,6 @@ def _make_extract_batch(pkg_root: str, columns: list,
             _sys.path.insert(0, pkg_root)
         from pypdfproc_spark.core.extract import extract_document
 
-        # set the worker-process global in BOTH directions: Spark reuses
-        # Python workers across tasks, so an extended-mode batch would
-        # otherwise leave reused workers permanently in extended mode and
-        # silently break the strict byte-parity default of later batches
-        from pypdfproc_spark.core import filters as _filters
-
-        _filters.EXTENDED_FILTERS = extended_filters
-
         # lone-surrogate -> U+FFFD boundary rule: the SHARED helper
         # (core/extract.py utf8_safe) also used by the expectations twin
         # and the golden-parity test — one definition, no drift
@@ -130,7 +122,7 @@ def _make_extract_batch(pkg_root: str, columns: list,
 
         rows = []
         for payload in html:
-            r = extract_document(payload)
+            r = extract_document(payload, extended)
             rows.append(
                 (
                     [_utf8_safe(p) for p in r.pages],
@@ -149,16 +141,15 @@ def _make_extract_batch(pkg_root: str, columns: list,
     return _extract_batch
 
 
-_extract_udf = F.pandas_udf(
-    _make_extract_batch(_PKG_ROOT, [f.name for f in _EXTRACT_FIELDS]),
-    returnType=EXTRACT_STRUCT,
-)
-
-_extract_udf_extended = F.pandas_udf(
-    _make_extract_batch(_PKG_ROOT, [f.name for f in _EXTRACT_FIELDS],
-                        extended_filters=True),
-    returnType=EXTRACT_STRUCT,
-)
+@functools.cache
+def _extract_udf(extended: bool):
+    """The extraction pandas UDF for one filter mode, built once per
+    process so each mode's closure is pickled once."""
+    return F.pandas_udf(
+        _make_extract_batch(_PKG_ROOT, [f.name for f in _EXTRACT_FIELDS],
+                            extended),
+        returnType=EXTRACT_STRUCT,
+    )
 
 
 # -----------------------------------------------------------------------------
@@ -268,9 +259,8 @@ def extract(pages: DataFrame, extended_filters: bool = False) -> DataFrame:
     ``extended_filters``: opt out of strict filter parity — decode
     LZW/ASCIIHex/ASCII85/RunLength/filter-chain streams the reference
     drops (more yield, no longer byte-identical per url on those docs)."""
-    udf = _extract_udf_extended if extended_filters else _extract_udf
     return (
-        pages.withColumn("doc", udf(F.col("html")))
+        pages.withColumn("doc", _extract_udf(extended_filters)(F.col("html")))
         .withColumn("bytes_in", F.length("html"))
         .drop("html", "text")
     )

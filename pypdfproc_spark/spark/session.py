@@ -31,15 +31,11 @@ def arrow_rows_for_payload(avg_payload_bytes: int,
 def build_session(
     app: str = "pypdfproc-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
-    arrow_batch_rows: int | None = None,
+    shuffle_partitions: int = 32,
+    arrow_batch_rows: int = 64,
 ) -> SparkSession:
-    if arrow_batch_rows is None:
-        arrow_batch_rows = int(os.environ.get("SPARK_ARROW_BATCH_ROWS", "64"))
     if master is None:
         master = "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", "32"))
     b = (
         SparkSession.builder.appName(app)
         .master(master)
@@ -53,11 +49,8 @@ def build_session(
         # ever RAISES parallelism toward defaultParallelism (scale-
         # adaptive); at production byte volumes the floor never binds.
         # Measured (sf1.0, medians of 3): minhash 0.97->0.67 s,
-        # embedding-cosine 2.21->1.52 s.  Env-overridable.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_AQE_MIN_PARTITION_SIZE", "64k"),
-        )
+        # embedding-cosine 2.21->1.52 s.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # r06 (guide §3.1): allow shuffled-hash join where the per-
@@ -65,37 +58,25 @@ def build_session(
         # all equi-joins on id/hash keys whose build sides are candidate-
         # bounded, and skipping the SMJ sorts is a straight win; AQE can
         # also convert SMJ->SHJ at runtime below the local map threshold.
-        # Both knobs env-overridable; sort-merge remains the fallback
-        # whenever the planner's size conditions are not met.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_PREFER_SMJ", "false"),
-        )
+        # Sort-merge remains the fallback whenever the planner's size
+        # conditions are not met.
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_SHJ_LOCAL_MAP_THRESHOLD", "67108864"),
+            "67108864",
         )
-        # r06: whole-stage codegen OFF by default for this workload class
+        # r06: whole-stage codegen OFF for this workload class
         # — one-shot analytic queries over seconds of data pay janino
         # compilation (measured 2-3.5 s per unique query: minhash first
         # run 5.2 -> 1.5 s, embedding-cosine 3.9 -> 2.7 s) that dwarfs
         # the interpreted-execution penalty (warm execution measured
         # equal within noise, incl. the 500k-doc extraction: 11.2/8.8 s
-        # codegen vs 9.5/8.9 s interpreted, interleaved).  Long-running
-        # production jobs where execution dominates should set
-        # SPARK_WHOLESTAGE_CODEGEN=true; results are identical either
-        # way (execution mode only).
-        .config(
-            "spark.sql.codegen.wholeStage",
-            os.environ.get("SPARK_WHOLESTAGE_CODEGEN", "false"),
-        )
-        # r06 (guide §2.3): shuffle/spill codec, env-overridable for A/B;
-        # lz4 is the default — zstd measured no better on this host's
-        # payload mix (see OPTIMIZATION_r06.md)
-        .config(
-            "spark.io.compression.codec",
-            os.environ.get("SPARK_IO_CODEC", "lz4"),
-        )
+        # codegen vs 9.5/8.9 s interpreted, interleaved).  Results are
+        # identical either way (execution mode only).
+        .config("spark.sql.codegen.wholeStage", "false")
+        # r06 (guide §2.3): shuffle/spill codec lz4 — zstd measured no
+        # better on this host's payload mix (see OPTIMIZATION_r06.md)
+        .config("spark.io.compression.codec", "lz4")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch_rows)
         )

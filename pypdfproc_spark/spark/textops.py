@@ -24,7 +24,7 @@ N_PERM = 8  # minhash permutations
 N_BANDS = 4  # bands of 2 rows each
 
 
-def spread_scan(df: DataFrame, barrier: bool = True) -> DataFrame:
+def spread_scan(df: DataFrame) -> DataFrame:
     """Spread a degenerate scan across the cluster (guide §2.5 input skew).
 
     The sf documents/customer tables are single-row-group parquet files, and
@@ -49,11 +49,6 @@ def spread_scan(df: DataFrame, barrier: bool = True) -> DataFrame:
         return df
     if n >= target:
         return df
-    if not barrier:
-        # filter-free consumers (the events window queries): a plain
-        # repartition parallelizes everything above it and costs no
-        # materialization
-        return df.repartition(target)
     # LAZY localCheckpoint: predicate pushdown would otherwise move any
     # filter (including regexp/tokenize-shaped ones, e.g. pii_scan and
     # quality_score) BELOW the repartition and back into the serial scan

@@ -1,4 +1,4 @@
-"""EXTENDED_FILTERS end-to-end gate (VERDICT r04 item 4).
+"""Extended filter mode end-to-end gate (VERDICT r04 item 4).
 
 The opt-in superset path (LZW / ASCIIHex / ASCII85 / RunLength, chains,
 abbreviations, TIFF/PNG predictors) previously had unit tests only — a
@@ -16,7 +16,6 @@ import os
 import pytest
 
 from fixtures.extgen import EXT_FIXTURES, build_all
-from pypdfproc_spark.core import filters
 from pypdfproc_spark.core.extract import extract_document
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -32,11 +31,7 @@ def test_all_extended_fixtures_have_goldens():
 
 @pytest.mark.parametrize("name", sorted(EXT_FIXTURES))
 def test_extended_mode_matches_golden(name):
-    filters.EXTENDED_FILTERS = True
-    try:
-        r = extract_document(PDFS[name])
-    finally:
-        filters.EXTENDED_FILTERS = False
+    r = extract_document(PDFS[name], extended=True)
     assert r.pages == GOLDENS[name], name
     assert r.pages, "extended fixtures must extract text"
 
@@ -61,11 +56,12 @@ def spark():
 
 
 def test_pipeline_extended_udf(spark):
-    """Drive the EXTENDED Arrow UDF end-to-end: the same pages rows run
+    """Drive the Arrow UDF in extended mode end-to-end: the same pages rows run
     through pipeline.extract twice — strict drops them (decode_failures),
-    extended extracts the golden text — and the worker-global reset means
-    a strict batch AFTER an extended batch still drops (Spark reuses
-    Python workers; pinned here against regression)."""
+    extended extracts the golden text — and a strict batch AFTER an
+    extended batch still drops: the filter mode is an argument of each
+    batch's extract_document call, so nothing a reused Python worker ran
+    before can change it (pinned here against regression)."""
     import datetime
 
     from pypdfproc_spark.spark import pipeline as P

@@ -177,18 +177,12 @@ def test_lzw_content_stream_through_extract_document():
     f.add_stream(5, b"/Filter /LZWDecode", lzw_encode(content))
     data = f.build(1)
 
-    from pypdfproc_spark.core import filters as FL
-
     # strict default: reference parity — the page DROPS (fixture f57)
     r = extract_document(data)
     assert r.pages == [] and r.decode_failures == 1
 
     # extended mode: the superset decodes it end to end
-    FL.EXTENDED_FILTERS = True
-    try:
-        r = extract_document(data)
-    finally:
-        FL.EXTENDED_FILTERS = False
+    r = extract_document(data, extended=True)
     assert r.error is None, r.error
     assert r.pages == ["\nLZW works end to end"]
     assert r.decode_failures == 0
